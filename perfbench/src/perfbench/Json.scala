@@ -1,0 +1,34 @@
+package perfbench
+
+/** Minimal JSON writer for the result line, the fingerprint and the trace. */
+object Json {
+  final case class Raw(json: String)
+
+  def str(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    b += '"'
+    b.toString
+  }
+
+  def value(v: Any): String = v match {
+    case Raw(j) => j
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n: Long => n.toString
+    case n: Int => n.toString
+    case other => str(other.toString)
+  }
+
+  def obj(fields: Seq[(String, Any)]): String =
+    fields.map { case (k, v) => str(k) + ":" + value(v) }.mkString("{", ",", "}")
+}
